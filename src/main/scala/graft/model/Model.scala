@@ -193,7 +193,22 @@ final case class SLA(
     severity: String = "default",
     datapointsToAlarm: Int = 1,
     evaluationPeriods: Int = 1,
-    snsEnabled: Boolean = false)
+    snsEnabled: Boolean = false) {
+  SLA.requireVoteBounds(datapointsToAlarm, evaluationPeriods)
+}
+
+object SLA {
+  /** CloudWatch PutMetricAlarm bounds: 1 <= M <= N. Outside them the
+    * batch and streaming machines disagree (streaming clamps N to 1,
+    * the batch vote window does not), so configs fail loudly instead. */
+  def requireVoteBounds(datapointsToAlarm: Long, evaluationPeriods: Long): Unit = {
+    require(evaluationPeriods >= 1,
+      s"SLA evaluation_periods must be >= 1, got $evaluationPeriods")
+    require(datapointsToAlarm >= 1 && datapointsToAlarm <= evaluationPeriods,
+      s"SLA datapoints_to_alarm must be in [1, evaluation_periods=$evaluationPeriods], " +
+        s"got $datapointsToAlarm")
+  }
+}
 
 /** Named group of SLAs (set.py:36-48). */
 final case class SLASet(name: String, slas: Seq[SLA])

@@ -5,8 +5,7 @@ import org.apache.spark.sql.catalyst.util.QuantileSummaries
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.model.{ComparisonOperator, TreatMissingData}
-import graft.operators.StatWindowAgg
+import graft.operators.{AlarmStateMachine, StatWindowAgg}
 import graft.streaming.AlarmStream.{AlarmState, SlaConf, Transition}
 
 /**
@@ -301,16 +300,8 @@ object StreamingAlarmPipeline {
         slas.select("statistic").distinct(), 10000L,
         "StreamingAlarmPipeline distinct statistics (definition metadata)")
       .foreach(r => Option(r.getString(0)).foreach(validateStatistic))
-    graft.pipeline.DriverBounds.boundedCollect(
-      slas.select(col("period").cast("long"), col("comparison_operator"),
-        col("treat_missing_data")).distinct(), 10000L,
+    AlarmStateMachine.requireValidConfigs(slas,
       "StreamingAlarmPipeline distinct SLA configs (definition metadata)")
-      .foreach { r =>
-        require(!r.isNullAt(0) && r.getLong(0) > 0,
-          s"SLA period must be positive, got ${r.get(0)}")
-        ComparisonOperator.fromName(r.getString(1)) // throws with the bad name
-        TreatMissingData.fromName(r.getString(2))
-      }
     val statCol =
       if (perSla)
         org.apache.spark.sql.functions.coalesce(col("statistic"),

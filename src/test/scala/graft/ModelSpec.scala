@@ -72,6 +72,20 @@ class ModelSpec extends AnyFunSuite {
     assert(!sla.snsEnabled && sla.severity == "default")
   }
 
+  test("SLA rejects M/N outside 1 <= M <= N (PutMetricAlarm bounds)") {
+    def sla(m: Int, n: Int) = SLA(sample, "d", "d", 1.0,
+      ComparisonOperator.GreaterThanThreshold, datapointsToAlarm = m, evaluationPeriods = n)
+    val zeroN = intercept[IllegalArgumentException](sla(1, 0))
+    assert(zeroN.getMessage.contains("SLA evaluation_periods must be >= 1, got 0"))
+    val zeroM = intercept[IllegalArgumentException](sla(0, 3))
+    assert(zeroM.getMessage.contains(
+      "SLA datapoints_to_alarm must be in [1, evaluation_periods=3], got 0"))
+    val mOverN = intercept[IllegalArgumentException](sla(4, 3))
+    assert(mOverN.getMessage.contains(
+      "SLA datapoints_to_alarm must be in [1, evaluation_periods=3], got 4"))
+    assert(sla(3, 3).datapointsToAlarm == 3)
+  }
+
   test("TableRef alias defaults to table (dataset.py:11-18)") {
     assert(TableRef("db", "t").alias == "t")
     assert(TableRef("db", "t", "a").alias == "a")

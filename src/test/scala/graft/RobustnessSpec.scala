@@ -306,6 +306,38 @@ class RobustnessSpec extends SparkTestBase {
     assert(e.getMessage.contains("StreamingAlarmPipeline distinct statistics"))
   }
 
+  private def mOfNSlas(m: Int, n: Int) =
+    Seq(("s1", 60, 5.0, "GREATER_THAN_THRESHOLD", m, n, "NOT_BREACHING"))
+      .toDF("series_id", "period", "threshold", "comparison_operator",
+        "datapoints_to_alarm", "evaluation_periods", "treat_missing_data")
+
+  test("AlarmStateMachine: M/N outside 1 <= M <= N fails loudly") {
+    val series = Seq(("s1", 0L, 1.0)).toDF("series_id", "window_start", "metricvalue")
+    val negN = intercept[IllegalArgumentException] {
+      graft.operators.AlarmStateMachine.evaluate(series, mOfNSlas(1, -1))
+    }
+    assert(negN.getMessage.contains("SLA evaluation_periods must be >= 1, got -1"))
+    val mOverN = intercept[IllegalArgumentException] {
+      graft.operators.AlarmStateMachine.evaluate(series, mOfNSlas(3, 2))
+    }
+    assert(mOverN.getMessage.contains(
+      "SLA datapoints_to_alarm must be in [1, evaluation_periods=2], got 3"))
+  }
+
+  test("StreamingAlarmPipeline: M/N outside 1 <= M <= N fails loudly") {
+    val dps = Seq(("s1", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0))
+      .toDF("series_id", "ts", "value")
+    val zeroN = intercept[IllegalArgumentException] {
+      graft.streaming.StreamingAlarmPipeline.evaluateStream(dps, mOfNSlas(1, 0), "Sum")
+    }
+    assert(zeroN.getMessage.contains("SLA evaluation_periods must be >= 1, got 0"))
+    val zeroM = intercept[IllegalArgumentException] {
+      graft.streaming.StreamingAlarmPipeline.evaluateStream(dps, mOfNSlas(0, 2), "Sum")
+    }
+    assert(zeroM.getMessage.contains(
+      "SLA datapoints_to_alarm must be in [1, evaluation_periods=2], got 0"))
+  }
+
   test("mmrTopK: a query load past the driver-row budget fails loudly") {
     // 2 queries x poolSize 4 = 8 candidate rows > maxDriverRows 3 —
     // the out-of-regime caller gets the contract error, not an OOM

@@ -16,8 +16,10 @@ if not skip:
     # make the comparator silently grade STALE output as current
     import shutil
     shutil.rmtree(out, ignore_errors=True)
+    # build the checkout this script lives in, not a fixed path
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     r = subprocess.run(["sbt", "-batch", f'runMain graft.Verify {sf} {out}'],
-                       capture_output=True, text=True, cwd="/root/repo")
+                       capture_output=True, text=True, cwd=root)
     sys.stdout.write(r.stdout[-3000:])
     if r.returncode != 0:
         sys.stdout.write(r.stderr[-3000:]); sys.exit(1)
